@@ -91,28 +91,7 @@ object Bench {
   }
 
   private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // size file splits to the data: at sf0.1 every table is <= ~10 MB,
-      // so the default 128 MB split leaves each scan single-task; 4 MB
-      // lets the 32 cores participate (at 100 TB the default is right —
-      // this is the local-mode analog of "partitions sized to the SF")
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      // ~40 short streaming runs per bench leave dead state-store
-      // providers loaded until the maintenance thread notices; the 60 s
-      // default lets them pile up across passes — sweep every 10 s
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "10s")
-      // shuffle-file removal is fire-and-forget by default; make the
-      // cleaner block on it so resetSession's GC actually retires dead
-      // shuffle data between passes instead of during the next one
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     spark.sparkContext.addSparkListener(taskProbe)
     // absorb JVM/session warmup outside the measured section; its wall is
     // recorded as a sitting probe (see lastWarmupSec)
@@ -121,6 +100,8 @@ object Bench {
     lastWarmupSec = (System.nanoTime() - w0) / 1e9
     spark
   }
+
+  private val ResetSettleMs = 250L
 
   /** Drop state a finished query leaves behind, so the next query's
     * measurement is independent of catalog position. Not timed. */
@@ -146,12 +127,10 @@ object Bench {
     // full run at 250 ms). A 100 ms default was tried and rejected:
     // the full sf0.1 catalog measured 107.7 s steady vs 90.6 s at
     // 250 ms — the cleaner genuinely needs the beat at this reset
-    // rate. Env-overridable for heavy-SF sweeps where per-query cost
-    // dwarfs the settle.
-    val settle = sys.env.getOrElse("SPARK_GRAFT_RESET_SETTLE_MS", "250").toLong
-    Thread.sleep(settle)
+    // rate.
+    Thread.sleep(ResetSettleMs)
     System.gc()
-    Thread.sleep(settle)
+    Thread.sleep(ResetSettleMs)
   }
 
   /** 1 cold + `steadyPasses` steady passes with a reset before EVERY
@@ -301,10 +280,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val steadyPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    val steadyPasses = Sessions.intKnob(sys.env, "SPARK_GRAFT_BENCH_PASSES", 3, min = 1)
     // how many of the slowest sweep queries get a dedicated-session
     // re-measurement (0 disables, for quick local sweeps)
-    val isolateSlowest = sys.env.getOrElse("SPARK_GRAFT_ISOLATE_SLOWEST", "10").toInt
+    val isolateSlowest = Sessions.intKnob(sys.env, "SPARK_GRAFT_ISOLATE_SLOWEST", 10, min = 0)
 
     val loadStart = loadAvg()
     val spark = buildSession()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of catalog
   * queries without executing them — the `.explain("formatted")`
   * feedback loop the scale work runs on.
@@ -12,16 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     names.foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

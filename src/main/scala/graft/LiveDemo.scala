@@ -102,11 +102,7 @@ object LiveDemo {
 
   def main(args: Array[String]): Unit = {
     val seconds = args.headOption.map(_.toInt).getOrElse(14)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
     val r = run(spark, seconds)
     println(s"[live-demo] ${seconds}s wall @ Trigger.ProcessingTime(2s): " +
       s"paced_batches=${r.batches} median_gap_ms=${r.medianBatchGapMs} " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a larger scale factor from an existing testdata dir by
@@ -30,14 +30,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // legacy testdata wrote events.ts as parquet TIMESTAMP(NANOS),
     // readable only as a long of nanoseconds (same setting graft.Tables
     // applies); current testdata is timestamp[us], normalized below

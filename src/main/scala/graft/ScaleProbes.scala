@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale experiments that need more than a wall-clock number — prints
@@ -21,15 +20,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbes {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     args.toList match {
       case "passes" :: name :: sfDir :: nPasses :: armRest
@@ -298,86 +289,6 @@ object ScaleProbes {
         println(f"""[probe] {"probe":"semdedup","sf":"$sfDir","maxCell":$maxCell,""" +
           f""""n":$n,"cells":${stats.getLong(0)},"max_cell":${stats.getLong(1)},""" +
           f""""pair_volume":${stats.getLong(2)},"dropped":$dups,"wall_sec":$wall%.2f}""")
-      case "d08ab" :: sfDir :: Nil =>
-        // d08 pair-aggregate pre-combine experiment (r11 verdict #7): the
-        // 259M-pair (doc_a, doc_b) aggregate is the catalog's heaviest
-        // stage. Three arms over the IDENTICAL df-capped posting table:
-        //   a) current plan — groupBy(doc_a, doc_b).count (codegen hash
-        //      aggregate, partial+final)
-        //   b) packed key — same aggregate on ONE long (doc_a<<32|doc_b):
-        //      smaller shuffle rows, single-column hash
-        //   c) manual bounded pre-combine — mapPartitions LongMap pre-sum
-        //      (flush every 8M input rows) before the packed shuffle, the
-        //      literal "pre-sum within fp-bucket partitions" suggestion
-        // All three must agree exactly (count + checksum asserted).
-        import spark.implicits._
-        import graft.operators.Dedup
-        val docs = Tables.documents(spark, sfDir)
-        val e = Dedup.winnowFingerprints(docs, "doc_id", "text", k = 24, w = 8)
-          .select(col("doc_id"), explode(col("fps")).as("fp")).distinct()
-          .repartition(col("fp"))
-          .transform(graft.ops.Checkpoints.partitioned)
-        val ok = e.groupBy("fp").agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2 && col("df") <= 64).select("fp")
-        val pruned = e.join(ok, "fp").localCheckpoint(true)
-        val a = pruned.alias("a"); val b = pruned.alias("b")
-        val joined = a.join(b,
-          col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-        def report(arm: String, fn: () => (Long, Long)): Unit = {
-          val t0 = System.nanoTime()
-          val (n, sum) = fn()
-          val wall = (System.nanoTime() - t0) / 1e9
-          println(f"""[probe] {"probe":"d08ab","sf":"$sfDir","arm":"$arm",""" +
-            f""""pairs":$n,"checksum":$sum,"wall_sec":$wall%.2f}""")
-        }
-        def snap(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-          val r = df.agg(count(lit(1)), sum(expr("doc_a * 31 + doc_b * 17 + n_shared")))
-            .collect().head
-          (r.getLong(0), r.getLong(1))
-        }
-        val armA = () => snap(
-          joined.groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-            .agg(count(lit(1)).as("n_shared")).filter(col("n_shared") >= 4))
-        val armB = () => snap(
-          joined.select((shiftleft(col("a.doc_id"), 32)
-              .bitwiseOR(col("b.doc_id"))).as("pk"))
-            .groupBy("pk").agg(count(lit(1)).as("n_shared"))
-            .filter(col("n_shared") >= 4)
-            .select(shiftright(col("pk"), 32).as("doc_a"),
-              col("pk").bitwiseAND(lit(0xffffffffL)).as("doc_b"), col("n_shared")))
-        val armC = () => snap(
-          joined.select((shiftleft(col("a.doc_id"), 32)
-              .bitwiseOR(col("b.doc_id"))).as("pk"))
-            .as[Long]
-            .mapPartitions { it =>
-              new Iterator[(Long, Long)] {
-                private var seg: Iterator[(Long, Long)] = Iterator.empty
-                private def refill(): Unit = {
-                  val m = new scala.collection.mutable.LongMap[Long](1 << 16)
-                  var n = 0
-                  while (it.hasNext && n < 8000000) {
-                    val k = it.next(); m(k) = m.getOrElse(k, 0L) + 1L; n += 1
-                  }
-                  seg = m.iterator
-                }
-                def hasNext: Boolean =
-                  seg.hasNext || (it.hasNext && { refill(); seg.hasNext })
-                def next(): (Long, Long) = { if (!seg.hasNext) refill(); seg.next() }
-              }
-            }
-            .toDF("pk", "c").groupBy("pk").agg(sum("c").as("n_shared"))
-            .filter(col("n_shared") >= 4)
-            .select(shiftright(col("pk"), 32).as("doc_a"),
-              col("pk").bitwiseAND(lit(0xffffffffL)).as("doc_b"), col("n_shared")))
-        // warm-up pass (JIT/page cache), then 3 INTERLEAVED rounds per arm
-        // so session-level drift hits all arms equally; medians are the
-        // comparable numbers
-        armA()
-        for (round <- 1 to 3) {
-          report(s"a_r$round", armA)
-          report(s"b_r$round", armB)
-          report(s"c_r$round", armC)
-        }
       case "lshrecall" :: sfDir :: Nil =>
         // Recall cost of the e04 auto-bits law: mean top-5 recall vs
         // exact brute force for a deterministic query slice, fixed-8-bit
@@ -420,30 +331,6 @@ object ScaleProbes {
         val meanM = if (rsM.isEmpty) 0.0 else rsM.sum / rsM.length
         println(f"""[probe] {"probe":"lshrecall","sf":"$sfDir","arm":"multi",""" +
           f""""n":$n,"bits":$bitsM,"queries":${rsM.length},"recall_at5":$meanM%.4f}""")
-      case "lshab" :: sfDir :: Nil =>
-        // e04 auto-bits A/B: the occupancy law (autoLshBits) vs the
-        // historical fixed 8-bit signature, same corpus same session.
-        // Reports wall + the quantity the law controls (bucket occupancy).
-        import graft.functions.VectorFunctions.quantize
-        val emb = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), quantize(col("embedding")).as("embedding"))
-          .localCheckpoint(true)
-        val n = emb.count()
-        def run(label: String, dims: Seq[Int]): Unit = {
-          val t0 = System.nanoTime()
-          val out = graft.operators.Similarity.lshKnn(emb, k = 5, dims = dims)
-          val rows = out.count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val bits = if (dims.nonEmpty) dims.length
-                     else graft.operators.Similarity.autoLshBits(n, 64)
-          println(f"""[probe] {"probe":"lshab","sf":"$sfDir","arm":"$label",""" +
-            f""""n":$n,"bits":$bits,"occupancy":${n / (1L << bits)},""" +
-            f""""rows":$rows,"wall_sec":$wall%.2f}""")
-        }
-        run("fixed8", Seq(1, 9, 17, 25, 33, 41, 49, 57))
-        run("auto", Nil)
-        run("fixed8_again", Seq(1, 9, 17, 25, 33, 41, 49, 57))
-        run("auto_again", Nil)
       case "splitmem" :: nCells :: perCell :: maxCell :: Nil =>
         // Driver-memory bound of the enforceMaxCell split path: plant
         // nCells oversized cells of perCell vectors each (3 separable

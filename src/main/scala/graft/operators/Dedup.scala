@@ -626,8 +626,8 @@ object Dedup {
     // within fp partitions" idea — measured 190.9 s median, WORSE than
     // both: the typed Dataset boundary (encode/decode out of Tungsten
     // rows) costs more than the pre-sum saves, and the codegen partial
-    // aggregate was already doing the combining. graft.ScaleProbes d08ab
-    // reproduces all three arms.
+    // aggregate was already doing the combining. SCALING.md names the
+    // commit whose ScaleProbes d08ab still reproduces all three arms.
     // Packing is offered to INTEGRAL id columns only: a string-typed
     // numeric id would aggregate min/max lexicographically (max('50e8',
     // '9') = '9' passes the range check while the value overflows 32
@@ -637,15 +637,16 @@ object Dedup {
     // posting table (superset of pruned's ids — conservative), not the
     // pruned join: aggregating the join here would execute the
     // df-aggregate and fp-join once for this 1-row collect and AGAIN in
-    // the returned plan.
-    val idType = e.schema(id).dataType
+    // the returned plan. Both gates key on the CALLER's id type, not
+    // `e`'s: the fingerprint kernel carries every id as a long, so `e`
+    // would read integral for a string id and the output would come
+    // back long instead of in the input type.
+    val idType = docs.schema(id).dataType
     val integralId = idType match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    // SPARK_GRAFT_D08_TWOCOL=1 forces the fallback arm — the reproducible
-    // handle for the A/B above (bench both arms in one sitting).
     // `idsBounded = true` is the caller's PROMISE that every id already
     // sits in [0, 2³¹) — it skips the 1-row min/max probe job entirely
     // (one fewer scan of the checkpointed posting table per call; the
@@ -655,7 +656,6 @@ object Dedup {
     // matter what the caller promises, so the flag only short-circuits
     // the RANGE probe.
     val packable = integralId &&
-      !sys.env.get("SPARK_GRAFT_D08_TWOCOL").contains("1") &&
       (idsBounded || {
         val idRange = e.agg(min(col(id).cast("long")), max(col(id).cast("long")))
           .collect().head
@@ -679,6 +679,8 @@ object Dedup {
         .groupBy(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= minShared)
+        .select(col("doc_a").cast(idType).as("doc_a"), col("doc_b").cast(idType).as("doc_b"),
+          col("n_shared"))
   }
 
   /** Direct n-gram Jaccard near-duplicates via a document-frequency-pruned
@@ -884,28 +886,6 @@ object Dedup {
       text: String = "text",
       spanTokens: Int = 8): DataFrame = {
     val L = spanTokens
-    // A/B arm (r16 verdict #4 — same-sitting sf10 comparisons only):
-    // SPARK_GRAFT_D16=listagg folds the dup detection AND the hit join
-    // into ONE ObjectHashAggregate — partial collect_list ships
-    // per-partition per-gram position lists (hot boilerplate grams
-    // collapse to one row per partition, unique grams pay an array
-    // header), the min!=max dup predicate rides the same aggregate,
-    // survivors explode straight into mergeSpans. Removes the
-    // checkpoint materialization and the semi-join entirely. 100 TB
-    // caveat that keeps this an ARM, not the default: the merged
-    // per-gram list must fit reducer memory, so a mega-hot gram
-    // (boilerplate in ~10M docs) is a skew hazard the streamed
-    // row form does not have.
-    if (sys.env.get("SPARK_GRAFT_D16").contains("listagg")) {
-      val hits = spanOcc(docs, id, text, L)
-        .groupBy("h1", "h2")
-        .agg(collect_list(struct(col("doc_id"), col("pos"))).as("occs"),
-          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-        .filter(col("mn") =!= col("mx"))
-        .select(explode(col("occs")).as("o"))
-        .select(col("o.doc_id").as("doc_id"), col("o.pos").as("pos"))
-      return mergeSpans(hits, L)
-    }
     val occ = spanOcc(docs, id, text, L)
       // occ feeds BOTH the dup-gram aggregate and the hit join (the
       // d08/q46 multi-consumer class: the scan+tokenize+gram hashing ran
@@ -965,11 +945,6 @@ object Dedup {
 
   private[graft] def spanOcc(docs: DataFrame, id: String = "doc_id",
       text: String = "text", spanTokens: Int = 8): DataFrame = {
-    // A/B instrument (same-sitting comparisons only — the d12 rule):
-    // SPARK_GRAFT_SPANOCC=expr selects the pre-r16 column-expression
-    // kernel (gram-string concat + double xxhash64)
-    if (sys.env.get("SPARK_GRAFT_SPANOCC").contains("expr"))
-      return spanOccExpr(docs, id, text, spanTokens)
     val L = spanTokens
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1023,25 +998,6 @@ object Dedup {
         }
       }
       .toDF()
-  }
-
-  /** The pre-r16 spanOcc kernel, kept as the A/B counter-arm: gram
-    * strings materialized per position and hashed twice (the measured
-    * sf10 GC-wall allocation class). Selected by
-    * SPARK_GRAFT_SPANOCC=expr; NOT the production path.
-    */
-  private def spanOccExpr(docs: DataFrame, id: String,
-      text: String, spanTokens: Int): DataFrame = {
-    val L = spanTokens
-    docs
-      .select(col(id).as("doc_id"), tokens(col(text)).as("tk"))
-      .filter(size(col("tk")) >= L)
-      .select(col("doc_id"), posexplode(transform(
-        transform(sequence(lit(0), size(col("tk")) - L),
-          i => concat_ws(" ", slice(col("tk"), i + 1, lit(L)))),
-        g => struct(xxhash64(g).as("h1"), xxhash64(lit("d16b"), g).as("h2")))))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("col.h1").as("h1"), col("col.h2").as("h2"))
   }
 
   /** [[dupSpans]]'s merge half, shared with the streaming leg: hit
@@ -1149,14 +1105,10 @@ object Dedup {
     // straight into one MessageDigest (no array, no concatenated
     // string, one digest + counter per doc). seg_idx is unique per doc,
     // so sorting by (doc_id, seg_idx) reproduces
-    // array_sort(struct(seg_idx, seg)) exactly; concat_ws(" ") never
-    // sees nulls here (seg is an array_join output). The old aggregate
-    // stays behind SPARK_GRAFT_N29=agg as the A/B counter-arm, and the
-    // d18/n29 oracles recompute cleaned_hash independently.
-    val perDoc =
-      if (sys.env.get("SPARK_GRAFT_N29").contains("agg"))
-        reassembleKeptAgg(kept)
-      else reassembleKeptTyped(kept)
+    // array_sort(struct(seg_idx, seg)) exactly. The typed walk is
+    // spec-pinned against that aggregate (References.reassembleKeptAgg),
+    // and the d18/n29 oracles recompute cleaned_hash independently.
+    val perDoc = reassembleKeptTyped(kept)
     val totals = segs.groupBy("doc_id")
       .agg((max(col("seg_idx")) + 1).cast("long").as("n_segments"))
     docIds
@@ -1170,27 +1122,26 @@ object Dedup {
         coalesce(col("cleaned_hash"), md5(lit(""))).as("cleaned_hash"))
   }
 
-  /** [[reassembleSegments]]'s per-doc summary, original aggregate form
-    * (collect_list + array_sort + concat_ws + md5) — the
-    * SPARK_GRAFT_N29=agg A/B counter-arm. */
-  private[graft] def reassembleKeptAgg(kept: DataFrame): DataFrame =
-    kept.groupBy("doc_id").agg(
-      count(lit(1)).cast("long").as("kept_segments"),
-      md5(concat_ws(" ",
-        transform(array_sort(collect_list(struct(col("seg_idx"), col("seg")))),
-          s => s("seg")))).as("cleaned_hash"))
-
   /** [[reassembleSegments]]'s per-doc summary as a typed sorted
     * pointer-walk (the scrubSpans pattern): same shuffle bytes, a sort
     * instead of an object-aggregate buffer, zero per-doc array or
-    * concatenated-string allocation. Byte-identical output to
-    * [[reassembleKeptAgg]] (spec-pinned; the oracle recomputes the md5
-    * independently at every gated SF). */
+    * concatenated-string allocation. Byte-identical output to the
+    * collect_list + array_sort + concat_ws + md5 aggregate (spec-pinned
+    * against that form; the oracle recomputes the md5 independently at
+    * every gated SF).
+    *
+    * Every input column must be non-null: segments come from an
+    * array_join, so a null is an upstream bug. It fails the job with
+    * an error naming the column rather than an NPE in the encoder
+    * (doc_id, seg_idx) or in `getBytes` (seg). On non-nullable inputs
+    * the optimizer folds the check away. */
   private[graft] def reassembleKeptTyped(kept: DataFrame): DataFrame = {
     val spark = kept.sparkSession
     import spark.implicits._
+    def nonNull(c: String, t: String): Column = when(col(c).isNull,
+      raise_error(lit(s"reassembleKeptTyped: null $c"))).otherwise(col(c)).cast(t).as(c)
     kept
-      .select(col("doc_id").cast("long"), col("seg_idx").cast("int"), col("seg"))
+      .select(nonNull("doc_id", "long"), nonNull("seg_idx", "int"), nonNull("seg", "string"))
       .repartition(col("doc_id"))
       .sortWithinPartitions("doc_id", "seg_idx")
       .as[(Long, Int, String)]
@@ -1253,16 +1204,13 @@ object Dedup {
     * per doc. The md5-of-kept-tokens fingerprint is byte-identical to
     * the old `md5(concat_ws(" ", ...))` (the oracle recomputes it
     * independently, so the equivalence is cross-checked at every gated
-    * SF). The old expression kernel stays behind
-    * SPARK_GRAFT_SPANOCC=expr as the A/B counter-arm.
+    * SF).
     */
   def scrubSpans(
       docs: DataFrame,
       spans: DataFrame,
       id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SPANOCC").contains("expr"))
-      return scrubSpansExpr(docs, spans, id, text)
     val spark = docs.sparkSession
     import spark.implicits._
     val perDoc = spans
@@ -1327,42 +1275,4 @@ object Dedup {
   private[graft] final case class SpanRange(span_start: Long, span_end: Long)
   private[graft] final case class ScrubOut(doc_id: Long, n_tokens: Long,
       kept_tokens: Long, removed_tokens: Long, cleaned_hash: String)
-
-  /** The pre-r16 scrub kernel (interpreted HOF cut), kept as the A/B
-    * counter-arm under SPARK_GRAFT_SPANOCC=expr. NOT the production
-    * path.
-    */
-  private def scrubSpansExpr(
-      docs: DataFrame,
-      spans: DataFrame,
-      id: String,
-      text: String): DataFrame = {
-    val perDoc = spans
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("spans"))
-    val noSpans = array().cast("array<struct<span_start:bigint,span_end:bigint>>")
-    docs
-      // coalesce NULL text to '' (as segmentize does) so this arm
-      // agrees with the typed kernel on null-text rows — tokens(NULL)
-      // is NULL and size(NULL) = -1, which would make an A/B over a
-      // null-bearing fixture diff for a reason unrelated to the
-      // kernels under comparison (ADVICE r16)
-      .select(col(id).as("doc_id"),
-        tokens(coalesce(col(text), lit(""))).as("tk"))
-      .join(perDoc, Seq("doc_id"), "left")
-      // keep a token iff no span covers its position; transform's
-      // (element, index) lambda avoids sequence() (whose inferred
-      // negative step on empty docs would yield [0, -1], not [])
-      .withColumn("kept",
-        filter(
-          transform(col("tk"), (t, i) => struct(t.as("tok"), i.cast("long").as("pos"))),
-          s => !exists(coalesce(col("spans"), noSpans),
-            sp => s("pos") >= sp("span_start") && s("pos") <= sp("span_end"))))
-      .select(
-        col("doc_id"),
-        size(col("tk")).cast("long").as("n_tokens"),
-        size(col("kept")).cast("long").as("kept_tokens"),
-        (size(col("tk")) - size(col("kept"))).cast("long").as("removed_tokens"),
-        md5(concat_ws(" ", transform(col("kept"), s => s("tok")))).as("cleaned_hash"))
-  }
 }

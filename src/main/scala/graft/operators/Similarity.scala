@@ -713,11 +713,8 @@ object Similarity {
     val corpusBytesEst =
       if (nVectors >= 0) nVectors * rowBytes
       else nlist.toLong * nlist * rowBytes
-    // SPARK_GRAFT_PROBE_NOBC=1 forces the shuffle arm — the reproducible
-    // A/B handle (the d08 SPARK_GRAFT_D08_TWOCOL pattern)
     if (probeBytes <= maxProbeBroadcastBytes &&
-        corpusBytesEst >= probeBroadcastRatio * probeBytes &&
-        !sys.env.get("SPARK_GRAFT_PROBE_NOBC").contains("1")) broadcast(probes)
+        corpusBytesEst >= probeBroadcastRatio * probeBytes) broadcast(probes)
     else probes
   }
 
@@ -1157,8 +1154,8 @@ object Similarity {
     * (dedicated medians). The Dataset encode/decode boundary and the
     * per-group member-array materialization cost more than the
     * codegen'd join pipeline saves — d08's mapPartitions lesson in
-    * multi-table costume. SPARK_GRAFT_E18_KERNEL=1 (or
-    * pairJoin = false) routes to it, the reproducible A/B handle.
+    * multi-table costume. The pair join is spec-pinned byte-identical
+    * against it (References.lshKnnMultiKernel).
     *
     * With `bitsPerTable <= 0` (the default) the PER-TABLE bit count
     * follows the same `autoLshBits` occupancy law as e04, and the table
@@ -1171,10 +1168,23 @@ object Similarity {
     */
   def lshKnnMulti(vectors: DataFrame, k: Int, tables: Int = 4,
                   bitsPerTable: Int = 0, maxBucket: Int = 4096,
-                  targetBucket: Int = 64,
-                  pairJoin: Boolean =
-                    !sys.env.get("SPARK_GRAFT_E18_KERNEL").contains("1")): DataFrame = {
-    val spark = vectors.sparkSession
+                  targetBucket: Int = 64): DataFrame =
+    multiTableBuckets(vectors, tables, bitsPerTable, targetBucket) match {
+      case Some((emb, bucketArr)) =>
+        multiPairJoin(vectors.sparkSession, emb, bucketArr, k, maxBucket)
+      case None =>
+        vectors.sparkSession.emptyDataFrame
+          .withColumn("query_id", lit(0L)).withColumn("neighbor_id", lit(0L))
+          .withColumn("rank", lit(0L)).withColumn("cos", lit(0.0))
+          .limit(0)
+    }
+
+  /** [[lshKnnMulti]]'s set-up, shared with the test-scope kernel
+    * reference: the materialized (vec_id, v) projection and the
+    * per-table bucket-key array column, or None for an empty corpus.
+    */
+  private[graft] def multiTableBuckets(vectors: DataFrame, tables: Int,
+      bitsPerTable: Int, targetBucket: Int): Option[(DataFrame, Column)] = {
     // ONE materialization of the (id, vector) projection: the law's
     // count, the bucket build, and BOTH rerank join sides read it —
     // without this the upstream corpus plan re-executes up to 4x (the
@@ -1183,11 +1193,7 @@ object Similarity {
       col("embedding").cast("array<double>").as("v"))
       .localCheckpoint(true)
     val n = emb.count()
-    if (n == 0)
-      return emb.sparkSession.emptyDataFrame
-        .withColumn("query_id", lit(0L)).withColumn("neighbor_id", lit(0L))
-        .withColumn("rank", lit(0L)).withColumn("cos", lit(0.0))
-        .limit(0)
+    if (n == 0) return None
     val inDims = emb.select(size(col("v"))).first().getInt(0)
     val ladder = lshDimLadder(inDims)
     val bits =
@@ -1199,11 +1205,10 @@ object Similarity {
     val bucketArr = array((0 until effTables).map(t =>
       signBucket(col("v"),
         ladder.slice(t * bits, (t + 1) * bits))): _*)
-    if (pairJoin) multiPairJoin(spark, emb, bucketArr, k, maxBucket)
-    else multiKernel(spark, emb, bucketArr, k, maxBucket)
+    Some((emb, bucketArr))
   }
 
-  /** The production pair-join arm of [[lshKnnMulti]] (see its doc).
+  /** The pair-join plan of [[lshKnnMulti]] (see its doc).
     * `emb` must be the materialized (vec_id, v) projection and
     * `bucketArr` the per-table bucket-key array column.
     */
@@ -1236,63 +1241,6 @@ object Similarity {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
-
-  /** The per-group kernel arm of [[lshKnnMulti]] — the RECORDED
-    * COUNTER-EXAMPLE (slower than the pair join at sf10, see the
-    * lshKnnMulti doc): one vector-bearing explode,
-    * per-(table,bucket,salt) exact top-k in the lshKnn typed kernel,
-    * global top-k over the deduped union (provably exact, spec-pinned
-    * byte-identical to the pair join).
-    */
-  private def multiKernel(spark: SparkSession, emb: DataFrame,
-      bucketArr: Column, k: Int, maxBucket: Int): DataFrame = {
-    import spark.implicits._
-    // vectors ride the explode ONCE (L·n rows); checkpointed — feeds the
-    // size aggregate and the kernel input (multi-consumer class)
-    val tagged = emb
-      .select(col("vec_id"), posexplode(bucketArr), col("v"))
-      .select(col("vec_id"), concat_ws("#", col("pos"), col("col")).as("tkey"), col("v"))
-      .localCheckpoint(true)
-    val sizes = tagged.groupBy("tkey").agg(count(lit(1)).as("bn"))
-    val grouped = tagged.join(sizes, "tkey")
-      .select(col("vec_id"),
-        concat_ws("#", col("tkey"),
-          when(col("bn") <= maxBucket, lit(0L))
-            .otherwise(pmod(xxhash64(col("vec_id")),
-              ceil(col("bn") / maxBucket).cast("long")))).as("gkey"),
-        col("v"))
-    // the lshKnn kernel, verbatim: per-group exact (cos desc, id asc)
-    // top-k with the same scalar loop as the codegen'd cosine_sim
-    val perGroup = grouped
-      .as[(Long, String, Array[Double])]
-      .groupByKey(_._2)
-      .flatMapGroups { (_, it) =>
-        val members = it.map { case (id, _, v) => (id, v) }.toArray
-        def cos(a: Array[Double], b: Array[Double]): Double = {
-          var dot = 0.0; var na = 0.0; var nb = 0.0
-          var i = 0
-          while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-          dot / (math.sqrt(na) * math.sqrt(nb))
-        }
-        members.iterator.flatMap { case (qid, qv) =>
-          members.iterator
-            .collect { case (nid, nv) if nid != qid => (nid, cos(qv, nv)) }
-            .toArray.sortBy { case (nid, c) => (-c, nid) }
-            .take(k)
-            .map { case (nid, c) => (qid, nid, c) }
-        }
-      }
-      .toDF("query_id", "neighbor_id", "cos")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    perGroup
-      // cross-table repeats carry identical cos (same pair, same
-      // arithmetic) — dropping any one of them is deterministic
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "cos")
   }

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: print the deterministic trained constants as
@@ -22,11 +21,7 @@ object DebugFreeze {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
     import spark.implicits._
     val emb = Tables.embeddings(spark, d)
 

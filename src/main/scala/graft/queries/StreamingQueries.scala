@@ -1632,20 +1632,23 @@ object StreamingQueries {
     * Tables flagged floorWidth never derive fewer buckets than
     * defaultParallelism (the executor width of THIS session; scales
     * with the deployment instead of hard-coding 32).
+    *
+    * A source without statistics (an RDD-backed frame, say) reports
+    * `spark.sql.defaultSizeInBytes` — Long.MaxValue unless set — which
+    * would silently derive the 4096 cap. Any size at or above that
+    * sentinel takes the floor instead, and the decision is logged.
     */
-  private def atRestBuckets(src: DataFrame, floorWidth: Boolean = false): Int =
-    sys.env.get("SPARK_GRAFT_ATREST_BUCKETS") match {
-      // A/B counter-arm (same-sitting comparisons, the d12 rule) and a
-      // deployment override
-      case Some(n) => n.toInt
-      case None =>
-        val bytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
-        val floor =
-          if (floorWidth) src.sparkSession.sparkContext.defaultParallelism
-          else 8
-        val target = bytes / (16L * 1024 * 1024)
-        target.min(BigInt(4096)).max(BigInt(floor.max(8))).toInt
-    }
+  private[graft] def atRestBuckets(src: DataFrame, floorWidth: Boolean = false): Int = {
+    val plan = src.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes
+    val floor =
+      (if (floorWidth) src.sparkSession.sparkContext.defaultParallelism else 8).max(8)
+    if (bytes >= plan.conf.defaultSizeInBytes) {
+      System.err.println(s"[graft] atRestBuckets: source has no size statistics " +
+        s"(sizeInBytes $bytes), using the $floor-bucket floor")
+      floor
+    } else (bytes / (16L * 1024 * 1024)).min(BigInt(4096)).max(BigInt(floor)).toInt
+  }
 
   /** The in-memory catalog doesn't survive process restarts but the
     * warehouse FILES do — a table absent from the catalog whose location

@@ -87,13 +87,28 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "seg_idx", "seg")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val agg = rows(Dedup.reassembleKeptAgg(kept))
+    val agg = rows(References.reassembleKeptAgg(kept))
     val typed = rows(Dedup.reassembleKeptTyped(kept))
     assert(typed == agg)
     assert(agg(1L) == (3L, md5Hex("a b c dd é ü 漢")))
     assert(agg(3L) == (2L, md5Hex("head x tail")))
     // partition-layout invariance of the typed walk
     assert(rows(Dedup.reassembleKeptTyped(kept.repartition(7))) == agg)
+    // a null doc_id or seg is an upstream bug: the typed walk fails the
+    // job with an error naming the column, not an NPE in the encoder or
+    // in getBytes
+    val withNulls = Seq[(java.lang.Long, Int, String)](
+      (1L, 0, "a b"), (null, 1, "orphan"), (2L, 0, null)
+    ).toDF("doc_id", "seg_idx", "seg")
+    for ((label, input) <- Seq(
+        ("doc_id", withNulls.filter(col("seg").isNotNull)),
+        ("seg", withNulls.filter(col("doc_id").isNotNull)))) {
+      val err = intercept[Exception](Dedup.reassembleKeptTyped(input).collect())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toList
+      assert(msgs.exists(_.contains(s"reassembleKeptTyped: null $label")),
+        s"null $label must fail naming the column, got: ${msgs.headOption}")
+    }
   }
 
   test("repetition signals match hand-computed micro-fractions") {
@@ -296,6 +311,27 @@ class DedupSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(rows(promised) == rows(probed))
+  }
+
+  test("winnowCandidates two-column fallback: same pairs as the packed path, input id type") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    def pairs(df: org.apache.spark.sql.DataFrame, shift: Long = 0L) =
+      df.collect().map(r => (r.get(0).toString.toLong - shift,
+        r.get(1).toString.toLong - shift, r.getLong(2))).toSet
+    val packed = Dedup.winnowCandidates(docs)
+    val expected = pairs(packed)
+    assert(expected.nonEmpty, "fixture must yield candidate pairs")
+    assert(packed.schema("doc_a").dataType == LongType)
+    // (a) string ids fail the integral type gate
+    val asString = Dedup.winnowCandidates(docs.withColumn("doc_id", col("doc_id").cast("string")))
+    assert(asString.schema("doc_a").dataType == StringType)
+    assert(asString.schema("doc_b").dataType == StringType)
+    assert(pairs(asString) == expected)
+    // (b) ids past 2^31 fail the range probe
+    val shift = 3L << 31
+    val wide = Dedup.winnowCandidates(docs.withColumn("doc_id", col("doc_id") + lit(shift)))
+    assert(wide.schema("doc_a").dataType == LongType)
+    assert(pairs(wide, shift) == expected)
   }
 
   test("typed simhash kernel matches the column expression bit-for-bit") {
@@ -874,8 +910,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("lshKnnMulti: kernel form is byte-identical to the pair-join form") {
     import spark.implicits._
-    // the per-group-kernel arm (the recorded slower counter-example —
-    // Similarity.multiKernel doc) must be EXACT, not approximate: top-k
+    // the per-group-kernel form (the recorded slower counter-example —
+    // References.lshKnnMultiKernel) must be EXACT, not approximate: top-k
     // over the deduped union of per-group top-ks equals top-k over all
     // candidates under the strict (cos desc, id asc) order, and the
     // kernel's scalar cosine matches the codegen'd cosine_sim bit for
@@ -891,10 +927,10 @@ class SimilaritySpec extends SparkSpec {
         ("quantized-default", q, 4096, 0),
         ("float-12bit", vectors, 4096, 12),
         ("quantized-salted", q, 20, 0))) {
-      val kernel = rows(Similarity.lshKnnMulti(df, k = 5,
-        maxBucket = mb, bitsPerTable = bpt, pairJoin = false))
+      val kernel = rows(References.lshKnnMultiKernel(df, k = 5,
+        maxBucket = mb, bitsPerTable = bpt))
       val pair = rows(Similarity.lshKnnMulti(df, k = 5,
-        maxBucket = mb, bitsPerTable = bpt, pairJoin = true))
+        maxBucket = mb, bitsPerTable = bpt))
       assert(kernel == pair, s"$label: kernel and pair-join forms diverge")
     }
   }
