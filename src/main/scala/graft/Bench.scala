@@ -68,31 +68,71 @@ object Bench {
   @volatile private var lastWarmupSec: Double = 0.0
 
   /** Per-pass executor-side truth (r15 verdict #4): cumulative task
-    * executorRunTime and shuffle bytes, snapshotted around each timed
-    * pass like the JIT/GC beans. These are the two discriminators of
-    * the recorded storm-adjudication rule (SCALING.md): a host storm
-    * inflates exec_run 2-6x on BYTE-IDENTICAL plans, an engine
-    * regression moves the bytes. Listener events drain asynchronously;
-    * the post-pass snapshot waits a short settle (outside the timed
-    * section), which bounds attribution error to stray milliseconds —
-    * harmless against the rule's 2x threshold.
+    * executorRunTime, shuffle bytes and spill bytes, snapshotted around
+    * each timed pass like the JIT/GC beans. Run time and read+write
+    * shuffle bytes are the two discriminators of the recorded
+    * storm-adjudication rule (SCALING.md): a host storm inflates
+    * exec_run 2-6x on BYTE-IDENTICAL plans, an engine regression moves
+    * the bytes. Listener events drain asynchronously; the post-pass
+    * snapshot waits a short settle (outside the timed section), which
+    * bounds attribution error to stray milliseconds — harmless against
+    * the rule's 2x threshold.
     */
   private object taskProbe extends org.apache.spark.scheduler.SparkListener {
     val execRunMs = new java.util.concurrent.atomic.AtomicLong(0)
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val shuffleWriteBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val spillMemBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val spillDiskBytes = new java.util.concurrent.atomic.AtomicLong(0)
     override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
       if (m != null) {
         execRunMs.addAndGet(m.executorRunTime)
         shuffleBytes.addAndGet(
           m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
+        shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spillMemBytes.addAndGet(m.memoryBytesSpilled)
+        spillDiskBytes.addAndGet(m.diskBytesSpilled)
       }
     }
   }
 
-  private def buildSession(): SparkSession = {
+  /** Streaming state footprint (r14 verdict #7): the last progress of
+    * every stream started during a pass carries its state operators'
+    * row and byte totals — the byte witness for the "state is
+    * sketch-sized / corpus-shaped-but-RocksDB" claims. Keyed by run id,
+    * each keeping its maximum; a pass sums them and clears the maps.
+    */
+  private object stateProbe extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val rows = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Long]
+    val bytes = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Long]
+    val progressEvents = new java.util.concurrent.atomic.AtomicLong(0)
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      progressEvents.incrementAndGet()
+      val p = e.progress
+      if (p.stateOperators.nonEmpty) {
+        // RocksDB providers report ~0 memoryUsedBytes; their footprint
+        // lives in the custom metrics (names from
+        // RocksDBStateStoreProvider: SST files + pinned blocks)
+        val mem = p.stateOperators.map { so =>
+          def metric(k: String): Long =
+            Option(so.customMetrics.get(k)).map(_.longValue).getOrElse(0L)
+          so.memoryUsedBytes + metric("rocksdbSstFileSize") +
+            metric("rocksdbPinnedBlocksMemoryUsage")
+        }.sum
+        rows.merge(p.runId, p.stateOperators.map(_.numRowsTotal).sum, (a, b) => math.max(a, b))
+        bytes.merge(p.runId, mem, (a, b) => math.max(a, b))
+      }
+    }
+  }
+
+  private[graft] def buildSession(): SparkSession = {
     val spark = Sessions.local()
     spark.sparkContext.addSparkListener(taskProbe)
+    spark.streams.addListener(stateProbe)
     // absorb JVM/session warmup outside the measured section; its wall is
     // recorded as a sitting probe (see lastWarmupSec)
     val w0 = System.nanoTime()
@@ -105,7 +145,7 @@ object Bench {
 
   /** Drop state a finished query leaves behind, so the next query's
     * measurement is independent of catalog position. Not timed. */
-  private def resetSession(spark: SparkSession): Unit = {
+  private[graft] def resetSession(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     // unload every loaded state-store provider: each streaming run uses
@@ -133,15 +173,16 @@ object Bench {
     Thread.sleep(ResetSettleMs)
   }
 
-  /** 1 cold + `steadyPasses` steady passes with a reset before EVERY
-    * pass (not just every query): repeated runs of the same query
-    * otherwise accumulate their own dead checkpoint blocks and
-    * state-store providers, inflating later passes.
-    */
-  /** One pass's wall plus its sitting diagnostics (JIT + GC deltas)
-    * and its executor-side truth (task exec_run + shuffle bytes). */
+  /** One pass's wall plus its sitting diagnostics (JIT + GC deltas),
+    * its executor-side truth (task exec_run, read+write shuffle MB —
+    * the storm rule's byte witness — shuffle write MB, spill MB) and
+    * its streaming state footprint. A `failed` pass's query threw: its
+    * wall is not a timing. */
   private[graft] case class Pass(wall: Double, jitSec: Double, gcSec: Double,
-                                 execSec: Double, shuffleMb: Double)
+                                 execSec: Double, shuffleMb: Double,
+                                 shuffleWriteMb: Double = 0, spillMemMb: Double = 0,
+                                 spillDiskMb: Double = 0, stateRows: Long = 0,
+                                 stateMb: Double = 0, failed: Boolean = false)
 
   /** The recorded storm-adjudication rule (SCALING.md r15, encoded per
     * r15 verdict #4): a steady pass is a STORM pass when its task
@@ -185,9 +226,13 @@ object Bench {
       if (quiet.isEmpty) (steady, "all_storm")
       else if (quiet.size == steady.size) (steady, "quiet")
       else (quiet, "storm_excluded")
-    val walls = pool.map(_.wall).sorted
-    (walls(walls.length / 2), regime)
+    (medianPass(pool).wall, regime)
   }
+
+  /** The pass at the median wall. Passes are kept in run order, so
+    * every median sorts here. */
+  private[graft] def medianPass(passes: Seq[Pass]): Pass =
+    passes.sortBy(_.wall).apply(passes.length / 2)
 
   /** Isolated-vs-sweep adjudication (r18, closing r16 verdict #6's last
     * gap): the dedicated-session re-measure replaces the in-sweep median
@@ -218,62 +263,100 @@ object Bench {
     val ref = pooled.minBy(_.execSec)
     val isoQuiet = isoSteady.filterNot(p => isStormVs(ref, p))
     if (isoQuiet.nonEmpty) {
-      val walls = isoQuiet.map(_.wall).sorted
       val regime =
         if (isoQuiet.size == isoSteady.size) "quiet"
         else "storm_excluded"
-      (walls(walls.length / 2), regime, true)
+      (medianPass(isoQuiet).wall, regime, true)
     } else {
       val (m, r) = steadyMedian(sweepSteady)
       (m, s"iso_degraded+$r", false)
     }
   }
 
-  /** Post-pass settle: the listener bus drains task-end events
-    * asynchronously, and a fixed sleep after a heavy pass can let the
-    * tail bleed into the NEXT pass's exec/bytes delta (a spurious storm
-    * flag, or a masked real one). Poll the probe counters until two
-    * consecutive 50 ms reads are unchanged, bounded at 1 s. */
+  /** Post-pass settle: the listener bus drains task-end and stream
+    * progress events asynchronously, and a fixed sleep after a heavy
+    * pass can let the tail bleed into the NEXT pass's exec/bytes delta
+    * (a spurious storm flag, or a masked real one). Poll the probe
+    * counters until two consecutive 50 ms reads are unchanged, bounded
+    * at 1 s. */
   private def settleProbe(): Unit = {
-    var prev = (taskProbe.execRunMs.get(), taskProbe.shuffleBytes.get())
+    def counters() = (taskProbe.execRunMs.get(), taskProbe.shuffleBytes.get(),
+      stateProbe.progressEvents.get())
+    var prev = counters()
     var stable = 0
     var waited = 0L
     while (stable < 2 && waited < 1000) {
       Thread.sleep(50); waited += 50
-      val cur = (taskProbe.execRunMs.get(), taskProbe.shuffleBytes.get())
+      val cur = counters()
       if (cur == prev) stable += 1 else { stable = 0; prev = cur }
     }
   }
 
-  /** One query's full measurement: cold pass, storm-excluded steady
-    * median + its regime, and the raw steady passes (wall-sorted). */
-  private case class QRes(name: String, cold: Pass, median: Double,
-                          regime: String, steady: Seq[Pass])
+  /** One timed pass of `q` through the noop sink, with the probe deltas
+    * around it. A query that throws is reported on stderr and its pass
+    * marked failed. Callers reset the session before each pass. */
+  private[graft] def once(spark: SparkSession, q: Q, sfDir: String): Pass = {
+    import scala.jdk.CollectionConverters._
+    val jit0 = jitBean.getTotalCompilationTime
+    val gc0 = gcMillis()
+    val exec0 = taskProbe.execRunMs.get()
+    val sh0 = taskProbe.shuffleBytes.get()
+    val shw0 = taskProbe.shuffleWriteBytes.get()
+    val spm0 = taskProbe.spillMemBytes.get()
+    val spd0 = taskProbe.spillDiskBytes.get()
+    stateProbe.rows.clear(); stateProbe.bytes.clear()
+    val t0 = System.nanoTime()
+    val failed =
+      try {
+        q.benchFn.getOrElse(q.fn)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        false
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); true
+      }
+    val wall = (System.nanoTime() - t0) / 1e9
+    // outside the timed section: drain the listener-bus tail before
+    // snapshotting the per-pass deltas (polled, not a fixed sleep)
+    settleProbe()
+    def mb(bytes: Long): Double = bytes / 1048576.0
+    Pass(wall,
+      (jitBean.getTotalCompilationTime - jit0) / 1e3,
+      (gcMillis() - gc0) / 1e3,
+      (taskProbe.execRunMs.get() - exec0) / 1e3,
+      mb(taskProbe.shuffleBytes.get() - sh0),
+      shuffleWriteMb = mb(taskProbe.shuffleWriteBytes.get() - shw0),
+      spillMemMb = mb(taskProbe.spillMemBytes.get() - spm0),
+      spillDiskMb = mb(taskProbe.spillDiskBytes.get() - spd0),
+      stateRows = stateProbe.rows.values.asScala.sum,
+      stateMb = mb(stateProbe.bytes.values.asScala.sum),
+      failed = failed)
+  }
 
+  /** One query's full measurement: cold pass, storm-excluded steady
+    * median + its regime, and the raw steady passes in run order. */
+  private[graft] case class QRes(name: String, cold: Pass, median: Double,
+                                 regime: String, steady: Seq[Pass]) {
+    def failed: Boolean = (cold +: steady).exists(_.failed)
+  }
+
+  /** Splits results into the queries whose every pass ran and the names
+    * of those with a failed pass. A failed pass's wall is not a timing,
+    * so failed queries stay out of every median and total. */
+  private[graft] def dropFailed(results: Seq[QRes]): (Seq[QRes], Seq[String]) = {
+    val (failed, ok) = results.partition(_.failed)
+    (ok, failed.map(_.name))
+  }
+
+  /** 1 cold + `steadyPasses` steady passes with a reset before EVERY
+    * pass (not just every query): repeated runs of the same query
+    * otherwise accumulate their own dead checkpoint blocks and
+    * state-store providers, inflating later passes.
+    */
   private def measure(spark: SparkSession, q: Q, sfDir: String,
                       steadyPasses: Int): QRes = {
-    def once(): Pass = {
-      val jit0 = jitBean.getTotalCompilationTime
-      val gc0 = gcMillis()
-      val exec0 = taskProbe.execRunMs.get()
-      val sh0 = taskProbe.shuffleBytes.get()
-      val t0 = System.nanoTime()
-      try q.benchFn.getOrElse(q.fn)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}") }
-      val wall = (System.nanoTime() - t0) / 1e9
-      // outside the timed section: drain the listener-bus tail before
-      // snapshotting the per-pass deltas (polled, not a fixed sleep)
-      settleProbe()
-      Pass(wall,
-        (jitBean.getTotalCompilationTime - jit0) / 1e3,
-        (gcMillis() - gc0) / 1e3,
-        (taskProbe.execRunMs.get() - exec0) / 1e3,
-        (taskProbe.shuffleBytes.get() - sh0) / 1048576.0)
-    }
     resetSession(spark)
-    val cold = once()
-    val steady = Seq.fill(steadyPasses) { resetSession(spark); once() }.sortBy(_.wall)
+    val cold = once(spark, q, sfDir)
+    val steady = Seq.fill(steadyPasses) { resetSession(spark); once(spark, q, sfDir) }
     val (median, regime) = steadyMedian(steady)
     QRes(q.name, cold, median, regime, steady)
   }
@@ -290,8 +373,9 @@ object Bench {
     val warmupSweepSec = lastWarmupSec
     val keep = SparkEntry.onlyFilter
     val benched = SparkEntry.catalog.filter(_.bench).filter(q => keep(q.name))
-    val sweep = benched.map(q => measure(spark, q, sfDir, steadyPasses))
+    val sweepAll = benched.map(q => measure(spark, q, sfDir, steadyPasses))
     spark.stop()
+    val (sweep, sweepFailed) = dropFailed(sweepAll)
 
     // dedicated-session re-measurement of the slowest sweep queries:
     // one fresh SparkContext per query, so the recorded number carries
@@ -302,12 +386,14 @@ object Bench {
     // inflation hid — e.g. r16's 13.55 s n25).
     val slowNames = sweep.sortBy(-_.median).take(isolateSlowest).map(_.name)
     val isoWarmups = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val isolated = benched.filter(q => slowNames.contains(q.name)).map { q =>
-      val s = buildSession()
-      isoWarmups += lastWarmupSec
-      try measure(s, q, sfDir, steadyPasses)
-      finally s.stop()
-    }
+    val (isolated, isoFailed) = dropFailed(
+      benched.filter(q => slowNames.contains(q.name)).map { q =>
+        val s = buildSession()
+        isoWarmups += lastWarmupSec
+        try measure(s, q, sfDir, steadyPasses)
+        finally s.stop()
+      })
+    val failedNames = sweepFailed ++ isoFailed
     val loadEnd = loadAvg()
     val isoByName = isolated.map(r => r.name -> r).toMap
     val sweepByName = sweep.map(r => r.name -> r).toMap
@@ -315,7 +401,7 @@ object Bench {
     // the same query (see isoOrSweepMedian): a degraded isolation phase
     // falls back to the sweep median instead of publishing the inflated
     // dedicated-session number
-    val results = sweep.map { r =>
+    val results = sweep.filterNot(r => isoFailed.contains(r.name)).map { r =>
       isoByName.get(r.name) match {
         case None => r
         case Some(iso) =>
@@ -358,13 +444,13 @@ object Bench {
     // JIT-shaped" per query, not just per run
     val diagLine = {
       val kv = results.map { r =>
-        val medPass = r.steady(r.steady.length / 2)
+        val medPass = medianPass(r.steady)
         "\"" + r.name + s"""\":[${ms(r.cold.jitSec)},${ms(r.cold.gcSec)},${ms(medPass.jitSec)},${ms(medPass.gcSec)}]"""
       }.mkString("{", ",", "}")
       s"""{"metric":"pass_diag","unit":"sec","fields":["cold_jit","cold_gc","med_jit","med_gc"],"queries":$kv}"""
     }
     val sweepLine = s"""{"metric":"sweep_total","value":${ms(sweepTotal)},"unit":"sec","queries":${map(sweep.map(r => r.name -> r.median))},"note":"full-catalog single-session stress sweep, pre-isolation; storm-excluded medians"}"""
-    val fullLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${map(results.map(r => r.name -> r.median))},"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${map(results.map(r => r.name -> r.median))},"sf":"$sfDir","failed":${failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
 
     // storm self-labeling + best-pass walls (r15 verdict #4, extended
     // to cold passes per r16 verdict #6): per query, each steady pass's
@@ -384,13 +470,15 @@ object Bench {
         "\"" + r.name + "\":{" +
           s""""exec":[${r.steady.map(p => ms(p.execSec)).mkString(",")}],""" +
           s""""mb":[${r.steady.map(p => ms(p.shuffleMb)).mkString(",")}],""" +
+          s""""state_rows":[${r.steady.map(_.stateRows).mkString(",")}],""" +
+          s""""state_mb":[${r.steady.map(p => ms(p.stateMb)).mkString(",")}],""" +
           s""""storm":[${st.mkString(",")}],""" +
           s""""cold_exec":${ms(r.cold.execSec)},"cold_mb":${ms(r.cold.shuffleMb)},""" +
           s""""cold_storm":${isStormVs(bestSteady, r.cold)},""" +
           s""""regime":"${r.regime}",""" +
           s""""best":${ms(r.steady.map(_.wall).min)}}"""
       }.mkString("{", ",", "}")
-      s"""{"metric":"pass_probe","fields":{"exec":"per-steady-pass task exec_run sec","mb":"per-steady-pass shuffle bytes MB","storm":"per-steady-pass flag: exec_run > 2x best pass on ~identical bytes","cold_exec":"cold pass exec_run sec","cold_mb":"cold pass shuffle MB","cold_storm":"cold pass flagged vs best steady pass (cold JIT inflates exec too - read with cold_jit in pass_diag)","regime":"median regime: quiet | storm_excluded | all_storm","best":"best steady wall sec"},"queries":$kv}"""
+      s"""{"metric":"pass_probe","fields":{"exec":"per-steady-pass task exec_run sec","mb":"per-steady-pass shuffle bytes MB","state_rows":"per-steady-pass streaming state rows (sum over the pass's streams of each one's max)","state_mb":"per-steady-pass streaming state MB (memory + RocksDB SST + pinned blocks, summed the same way)","storm":"per-steady-pass flag: exec_run > 2x best pass on ~identical bytes","cold_exec":"cold pass exec_run sec","cold_mb":"cold pass shuffle MB","cold_storm":"cold pass flagged vs best steady pass (cold JIT inflates exec too - read with cold_jit in pass_diag)","regime":"median regime: quiet | storm_excluded | all_storm","best":"best steady wall sec"},"queries":$kv}"""
     }
     // raw isolated passes + the iso-vs-sweep decision, ALWAYS published
     // even when the sweep median stood — the adjudication must be
@@ -417,7 +505,7 @@ object Bench {
     val stormCount = stormByName.valuesIterator.map(_.count(identity)).sum
     val coldStormCount = results.count(r => isStormVs(r.steady.minBy(_.execSec), r.cold))
     val regimeCounts = results.groupBy(_.regime).map { case (k, v) => s""""$k":${v.size}""" }.mkString("{", ",", "}")
-    val summary = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${map(slowest)},"sf":"$sfDir","n_queries":${results.size},"steady_passes":$steadyPasses,"cold_total":${ms(coldTotal)},"sweep_total":${ms(sweepTotal)},"best_total":${ms(bestTotal)},"storm_pass_count":$stormCount,"cold_storm_count":$coldStormCount,"median_regimes":$regimeCounts,"isolated":${isolated.size},"iso_fallbacks":$isoFallbacks,$sitting,"note":"value = sum of STORM-EXCLUDED per-query steady medians (regime per query in pass_probe); slowest-$isolateSlowest re-measured in dedicated sessions; best_total = storm-regime number of record; full maps in $outPath"}"""
+    val summary = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${map(slowest)},"sf":"$sfDir","n_queries":${results.size},"failed":${failedNames.size},"steady_passes":$steadyPasses,"cold_total":${ms(coldTotal)},"sweep_total":${ms(sweepTotal)},"best_total":${ms(bestTotal)},"storm_pass_count":$stormCount,"cold_storm_count":$coldStormCount,"median_regimes":$regimeCounts,"isolated":${isolated.size},"iso_fallbacks":$isoFallbacks,$sitting,"note":"value = sum of STORM-EXCLUDED per-query steady medians (regime per query in pass_probe); slowest-$isolateSlowest re-measured in dedicated sessions; best_total = storm-regime number of record; full maps in $outPath"}"""
 
     println(coldLine)
     passLines.foreach(println)

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place a main builds its SparkSession. Bench, Verify, Explain,
-  * the scale tools and the demos all run under this config, so the
-  * correctness oracles gate the same plans the bench times.
+/** The one place a SparkSession is built. Bench, Verify, Explain, the
+  * scale tools, the demos and the specs (on 4 cores) all run under this
+  * config, so the correctness oracles gate the same plans the bench
+  * times.
   */
 object Sessions {
 

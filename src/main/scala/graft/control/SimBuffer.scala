@@ -69,5 +69,4 @@ final class SimBuffer(
   }
 
   def occupiedTime: Double = objTimes.sum
-  def occupiedSpace: Double = objSizes.sum
 }

@@ -73,10 +73,6 @@ object TextFunctions {
       lit(0L), (a, b) => a bitwiseOR b)
   }
 
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** Count of matches of a stopword alternation — the n-gram-heuristic
     * language-ID building block.
     */

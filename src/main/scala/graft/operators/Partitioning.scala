@@ -33,13 +33,6 @@ object Partitioning {
       .drop(replicated(key)).drop("__salt")
   }
 
-  /** Pre-partition both sides on the join key so downstream stage reuse
-    * avoids re-shuffles (the repartition-for-colocation pattern; with disk
-    * tables prefer bucketBy at write time).
-    */
-  def colocate(df: DataFrame, key: String, partitions: Int): DataFrame =
-    df.repartition(partitions, col(key))
-
   /** Z-order (Morton) key: interleave the low `bits` bits of each input
     * column so multi-dimensional locality survives a 1-D range partition.
     * Sorting/range-partitioning the at-rest layout by this key gives every

@@ -143,8 +143,6 @@ object TaskSim {
       }
       total
     }
-
-    def simulateRun(cores: Int = 4): (Double, Double) = (simulateRt(cores), simulateCost)
   }
 
   /** detect_to_track generator (execution_utils.py:280-291): one detector

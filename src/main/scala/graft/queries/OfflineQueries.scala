@@ -186,7 +186,7 @@ object OfflineQueries {
     * P(dominant = c | x) instead, which systematically over-sharpens
     * fractional futures — measured 0.0898 raw vs this protocol's
     * 0.0876/0.0630 under the L1 rule, vs the 0.0443 feature floor;
-    * ScaleProbes forecast_mae / forecast_floor.) Rows are replicated
+    * SCALING.md round 11.) Rows are replicated
     * with an exact integer sequence (a_c·4 ∈ {0..4}), and the fit sort
     * adds `label` so duplicated samples sit in a deterministic order —
     * identical rows make the single-partition LBFGS iteration sequence,

@@ -19,8 +19,8 @@ class BenchMedianSpec extends AnyFunSuite {
   }
 
   test("one storm pass on identical bytes is excluded from the median") {
-    // walls sorted as measure() produces them; the 9.0 s pass has 3x the
-    // exec_run of the best pass on byte-identical shuffle -> storm
+    // the 9.0 s pass has 3x the exec_run of the best pass on
+    // byte-identical shuffle -> storm
     val steady = Seq(p(1.0, 2.0, 100), p(1.1, 2.2, 100), p(9.0, 6.5, 100))
     assert(Bench.stormPasses(steady) == Seq(false, false, true))
     val (m, regime) = Bench.steadyMedian(steady)
@@ -58,6 +58,30 @@ class BenchMedianSpec extends AnyFunSuite {
     assert(Bench.isStormVs(bestSteady, p(8.0, 6.0, 100)))   // flagged
     assert(!Bench.isStormVs(bestSteady, p(8.0, 6.0, 400)))  // bytes moved
     assert(!Bench.isStormVs(p(0.1, 0.2, 1), p(1.0, 0.9, 1))) // tiny ref
+  }
+
+  test("passes in run order: the median sorts, the published order stays") {
+    // a query slowing down pass by pass: run order is the evidence
+    val steady = Seq(p(1.4, 2.2, 100), p(1.0, 2.0, 100), p(1.2, 2.1, 100))
+    assert(Bench.steadyMedian(steady) == ((1.2, "quiet")))
+    assert(Bench.medianPass(steady) == steady(2))
+    // a storm pass in the middle of the run is flagged in place
+    val stormy = Seq(p(1.1, 2.2, 100), p(9.0, 6.5, 100), p(1.0, 2.0, 100))
+    assert(Bench.stormPasses(stormy) == Seq(false, true, false))
+    assert(Bench.steadyMedian(stormy) == ((1.1, "storm_excluded")))
+  }
+
+  test("a query that throws is a failed pass, kept out of every median and total") {
+    val boom = Q("boom", (_, _) => throw new IllegalStateException("boom"))
+    val failed = Bench.once(SparkSpec.session, boom, "")
+    assert(failed.failed)
+    val ok = Seq(p(2.0, 3.0, 50), p(2.2, 3.1, 50))
+    val a = Bench.QRes("a", p(3.0, 4.0, 50), 2.2, "quiet", ok)
+    val fastFail = Bench.QRes("b", p(0.05, 0, 0), 0.05, "quiet",
+      Seq(failed, p(0.05, 0, 0)))
+    val (kept, names) = Bench.dropFailed(Seq(a, fastFail))
+    assert(kept == Seq(a) && names == Seq("b"))
+    assert(Bench.dropFailed(Seq(a)) == ((Seq(a), Nil)))
   }
 
   test("empty and single-pass lists degrade safely") {

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The env knobs are a closed, checked set: every SPARK_GRAFT_* name in
   * src/main is on the allow-list, operators and queries read no
   * environment at all, and the integer knobs fail loudly at startup.
+  * Sessions and measurement instruments each have one home.
   */
 class SessionsSpec extends AnyFunSuite {
 
@@ -41,10 +42,29 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("one SparkSession.builder in src/main, in Sessions") {
-    val builders = sources("src/main/scala").collect {
-      case (p, t) if t.contains("SparkSession.builder") => p.getFileName.toString
+    // src/test too, so specs run under the bench's config; this spec's
+    // own string literals name the call without making one
+    val stringLiteral = "\"(?:[^\"\\\\\n]|\\\\.)*\"".r
+    val builders = (sources("src/main/scala") ++ sources("src/test/scala")).collect {
+      case (p, t) if (if (p.getFileName.toString == "SessionsSpec.scala")
+          stringLiteral.replaceAllIn(t, "") else t).contains("SparkSession.builder") =>
+        p.getFileName.toString
     }
     assert(builders == List("Sessions.scala"))
+  }
+
+  test("the bench owns the measurement instruments") {
+    val main = sources("src/main/scala")
+    def filesWith(call: String): Set[String] =
+      main.collect { case (p, t) if t.contains(call) => p.getFileName.toString }.toSet
+    for (call <- Seq("StateStore.stop", "System.gc", "getCompilationMXBean",
+        "streams.addListener"))
+      assert(filesWith(call) == Set("Bench.scala"), call)
+    // the stages probe keeps its own stage listener: the bench records
+    // no stages
+    assert(filesWith("addSparkListener") == Set("Bench.scala", "ScaleProbes.scala"))
+    val probes = main.collectFirst { case (p, t) if p.endsWith("ScaleProbes.scala") => t }.get
+    assert("addSparkListener".r.findAllIn(probes).size == 1)
   }
 
   test("SPARK_GRAFT_CPUS: a positive integer, unset means every processor") {

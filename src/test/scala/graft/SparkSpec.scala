@@ -4,17 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs that need one. */
+/** Shared local SparkSession for specs that need one: the bench's
+  * config (`Sessions.local`) on 4 cores, so specs gate the same plans
+  * the bench times. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sfDir = "/root/testdata/sf0.001"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Sessions.local(4)
 }

@@ -44,6 +44,23 @@ class SourceAndDltSpec extends SparkSpec {
     assert(r.getDouble(4) == 40.0 && r.getDouble(5) == 60.0) // x2=x+w, y2=y+h
   }
 
+  test("decision-log sink writes the reference header and one row per decision (S8)") {
+    val s = spark
+    import s.implicits._
+    val chunks = (0 until 25).iterator.map(i => (i.toLong, Array(0.2, 0.5, 0.9)))
+    val log = graft.control.Replay.static(chunks, config = 2, knobRt = 1.5).toSeq
+    val dir = s"${tmpDir("decisionlog")}/log"
+    CsvSources.writeDecisionLog(log.map(r => (r.chunkId, r.chosenConfig,
+        r.chosenPlacement, r.cloudCost, r.runtimeS, r.score))
+      .toDF("chunk_id", "config", "placement", "cloud_cost", "runtime_s", "score"), dir)
+    val ls = Files.list(Paths.get(dir))
+    val part = try ls.filter(_.toString.endsWith(".csv")).findFirst().get finally ls.close()
+    val lines = Files.readAllLines(part)
+    val golden = scala.io.Source.fromResource("golden_skyscraper_log.csv")
+    try assert(lines.get(0) == golden.getLines().next()) finally golden.close()
+    assert(lines.size == log.length + 1)
+  }
+
   test("proc-log cleaner drops malformed rows (P11)") {
     val s = spark
     import s.implicits._

@@ -46,7 +46,7 @@ class StreamAnnSpec extends SparkSpec {
   }
 
   test("foreachBatch serving: per-batch probed-cell FILE pruning + parity with batch probeIvf") {
-    // The 10⁹-vector deployment form (AnnServeDemo): a query STREAM is
+    // The 10⁹-vector deployment form of n26: a query STREAM is
     // served through foreachBatch → probeIvf against the partitionBy(cell)
     // at-rest layout. Each micro-batch must (a) read only its own probed
     // cells' partition directories and (b) return exactly what the batch
